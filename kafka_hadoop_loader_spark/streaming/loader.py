@@ -25,11 +25,17 @@ Sources are pluggable (R5's deserializer hook, generalized):
 - "files": JSON-lines directory stream standing in for a topic; each
   file plays the role of a batch of Kafka messages.
 
-Scale notes: one streaming micro-batch is a normal Spark job — the
-partitioned write shuffles nothing (dynamic partition overwrite off,
-append only); with maxFilesPerTrigger/maxOffsetsPerTrigger the loader
-backfills unbounded history in bounded-memory increments.  The d=/h=
-layout is what makes every downstream query partition-prunable.
+Scale notes: one streaming micro-batch is a normal Spark job.  Before
+the sink it hash-shuffles its rows on the partition columns into
+``defaultParallelism`` tasks, so each (d, h[, extras]) is written by
+exactly one task: one file per partition per batch instead of one per
+input task per partition (the reference's map-only fan-out), with every
+core writing in parallel.  The price is one shuffle per batch, and a
+hot hour is written by a single task; maxFilesPerTrigger /
+maxOffsetsPerTrigger bound that task's input, and with them the loader
+backfills unbounded history in bounded-memory increments (append only,
+dynamic partition overwrite off).  The d=/h= layout is what makes every
+downstream query partition-prunable.
 """
 
 from __future__ import annotations
@@ -177,13 +183,11 @@ def transform(cfg: LoaderConfig, raw: DataFrame) -> DataFrame:
     """R5/R6/R7: parse payload, extract event time, derive d/h buckets."""
     parsed = raw.withColumn("rec", F.from_json("payload", cfg.payload_schema))
     ts_raw = F.col("rec").getField(cfg.timestamp_field).cast("bigint")
-    divisor = {"s": 1, "ms": 1, "us": 1}[cfg.timestamp_unit]
     to_ts = {
         "s": lambda c: F.timestamp_seconds(c),
         "ms": lambda c: F.timestamp_millis(c),
         "us": lambda c: F.timestamp_micros(c),
     }[cfg.timestamp_unit]
-    _ = divisor
     ts = to_ts(ts_raw)
     return parsed.select(
         "topic",
@@ -380,12 +384,19 @@ def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
     configure_runtime(spark)
     validate_config(spark, cfg, strict=True)
     out = transform(cfg, _read_stream(spark, cfg))
+    part_cols = ("d", "h", *cfg.extra_partition_cols)
     if cfg.output_format == "text":
         # R8 text-lines parity: the text sink takes exactly one string
         # column ("value" = the raw payload) plus the partition columns.
-        out = out.select(
-            F.col("payload").alias("value"), "d", "h", *cfg.extra_partition_cols
-        )
+        out = out.select(F.col("payload").alias("value"), *part_cols)
+    # One writer per output partition: hash-cluster rows on the
+    # partition columns so each (d, h[, extras]) lands in one task and
+    # the batch writes one file per partition.  The explicit task count
+    # keeps AQE (on for stateless streaming) from coalescing the small
+    # shuffle into a single task that would write every partition
+    # serially; a hash partitioner (not round-robin) sends a retried
+    # task the same rows.
+    out = out.repartition(spark.sparkContext.defaultParallelism, *part_cols)
     listener = _RunMetricsListener()
     spark.streams.addListener(listener)
     try:
@@ -394,7 +405,7 @@ def run_loader(spark: SparkSession, cfg: LoaderConfig) -> dict:
             .option("path", cfg.target_path)
             .option("checkpointLocation", cfg.checkpoint_path)
             .option("compression", cfg.compression)
-            .partitionBy("d", "h", *cfg.extra_partition_cols)
+            .partitionBy(*part_cols)
             .trigger(availableNow=True)
             .start()
         )

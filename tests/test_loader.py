@@ -106,6 +106,80 @@ def test_partition_pruning_on_loaded_data(spark, loader_dirs):
     assert "PartitionFilters" in plan
 
 
+def _files_per_partition(root: str) -> dict[str, int]:
+    """Data files in each leaf partition directory under ``root``, keyed
+    by its path relative to ``root`` (sink log and hidden .crc files
+    skipped)."""
+    counts = {}
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        rel = os.path.relpath(dirpath, root)
+        if rel.startswith("d=") and not dirnames:
+            counts[rel] = sum(not f.startswith(("_", ".")) for f in filenames)
+    return counts
+
+
+def _spread_files(indir: str, first_id: int, first_hour: int, hours: int) -> list[int]:
+    """Four JSON-lines files, each with events across the same ``hours``
+    hours, so every input task carries rows for every hour."""
+    ids = []
+    per_file = hours * 5
+    for f in range(4):
+        recs = _mk_events(first_id + f * 100, per_file, 0)
+        for j, r in enumerate(recs):  # 12 minutes apart from first_hour
+            r["ts"] = BASE_US + (first_hour * 60 + j * 12) * 60_000_000
+        _write_jsonl(f"{indir}/f{first_id + f}.jsonl", recs)
+        ids += [r["event_id"] for r in recs]
+    return ids
+
+
+@pytest.mark.parametrize(
+    "overrides",
+    [
+        pytest.param({}, id="parquet"),
+        pytest.param({"extra_partition_cols": ("topic",)}, id="parquet-extra-cols"),
+        pytest.param({"output_format": "text"}, id="text"),
+    ],
+)
+def test_one_file_per_partition_per_batch(spark, loader_dirs, overrides):
+    """Each batch writes exactly one file per d=/h=[/extra] partition,
+    however many input tasks carried rows for it, and the read-back is
+    the input's event_id multiset."""
+    cfg = LoaderConfig(
+        input_path=loader_dirs["input"],
+        target_path=loader_dirs["target"],
+        checkpoint_path=loader_dirs["checkpoint"],
+        **overrides,
+    )
+
+    def event_ids() -> list[int]:
+        if cfg.output_format == "text":
+            df = spark.read.text(cfg.target_path).withColumnRenamed("value", "payload")
+        else:
+            df = read_loaded(spark, cfg.target_path)
+        rows = df.selectExpr(
+            "CAST(get_json_object(payload, '$.event_id') AS BIGINT) AS id"
+        ).collect()
+        return sorted(r.id for r in rows)
+
+    ids = _spread_files(cfg.input_path, 0, first_hour=0, hours=6)
+    run_loader(spark, cfg)
+    first = _files_per_partition(cfg.target_path)
+    leaf = "/topic=events" if overrides.get("extra_partition_cols") else ""
+    assert first == {f"d=2024-01-01/h={h:02d}{leaf}": 1 for h in range(6)}
+    assert event_ids() == sorted(ids)
+
+    # increment over hours 04-07: two existing partitions, two new ones
+    ids += _spread_files(cfg.input_path, 1000, first_hour=4, hours=4)
+    run_loader(spark, cfg)
+    second = _files_per_partition(cfg.target_path)
+    added = {p: n - first.get(p, 0) for p, n in second.items()}
+    assert added == {
+        f"d=2024-01-01/h={h:02d}{leaf}": int(h >= 4) for h in range(8)
+    }
+    assert event_ids() == sorted(ids)
+
+
 def test_cli_end_to_end_incremental(spark, tmp_path):
     """R10 parity: the CLI runs a bounded load; a second invocation with
     the same checkpoint loads only newly-arrived files (R2/R9)."""
